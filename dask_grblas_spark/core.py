@@ -538,11 +538,8 @@ class GrVector(BaseType):
     def ewise_add(self, other, op=None, *, require_monoid=True) -> Expr:
         other = _as_vector(other)
         _check_same_shape(self, other)
+        # any binary op is accepted, like grblas with require_monoid=False
         op = _resolve_binary(op, default=monoid.plus)
-        if require_monoid and not isinstance(op, Monoid) \
-                and op.name not in monoid._registry:
-            # the reference defaults to requiring a monoid for ewise_add
-            pass  # we allow any binary op, like grblas with require_monoid=False
         op = op.binaryop if isinstance(op, Monoid) else op
         out_dt = op.out_dtype(self.dtype, other.dtype)
         a_df, b_df = self._df, other._df
@@ -566,8 +563,6 @@ class GrVector(BaseType):
 
     # -- matmul (M3) -----------------------------------------------------------
     def vxm(self, other, op=None) -> Expr:
-        if isinstance(other, TransposedMatrix):
-            pass  # df view already transposed
         if not isinstance(other, GrMatrix):
             raise TypeError("vxm requires a Matrix")
         op = _resolve_semiring(op)
@@ -1141,8 +1136,7 @@ def _broadcastable(obj) -> bool:
         return n <= _BROADCAST_NVALS_LIMIT
     if obj.kind == "vector" and obj.size is not None:
         return obj.size <= _BROADCAST_NVALS_LIMIT
-    if obj.kind == "matrix" and obj.nrows is not None and obj.ncols is not None:
-        return False  # unknown density: do not risk broadcasting a matrix
+    # matrices of unknown density are never broadcast
     return False
 
 

@@ -71,10 +71,9 @@ class Expr:
         if mask_t is not None and not self.pushdown and self.kind != "scalar":
             df = apply_mask(df, keys, mask_t[0], mask_t[1], keep_pass=True)
         if out_dtype != self.dtype:
-            df = df.select(*keys[: 0] if self.kind == "scalar" else keys,
-                           F.col("v").cast(out_dtype.spark_type).alias("v")) \
-                if self.kind != "scalar" else \
-                df.select(F.col("v").cast(out_dtype.spark_type).alias("v"))
+            key_cols = [] if self.kind == "scalar" else keys
+            df = df.select(*key_cols,
+                           F.col("v").cast(out_dtype.spark_type).alias("v"))
         if self.kind == "scalar":
             return core.GrScalar(df, out_dtype, name=name)
         if self.kind == "vector":

@@ -154,12 +154,6 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                 .filter(F.length("sh") > 0))
 
 
-# share the per-doc shingle-set relation across plan branches via a lazy
-# localCheckpoint (see _doc_shingle_sets); disable on clusters where
-# executor loss must be survivable by lineage recompute
-SHARE_SETS = True
-
-
 def _spread_small_input(df: DataFrame) -> DataFrame:
     """Repartition up to the session's parallelism when the scan yields
     fewer partitions than cores (tiny corpora arrive as one parquet
@@ -232,11 +226,8 @@ def _doc_shingle_sets(df: DataFrame, id_col: str, text_col: str,
     # repeatedly (reproduced: 1125 ERROR lines across 5 bench reps of
     # q31+q32 with eager=False, 0 with eager=True; ~0.2 s extra on a
     # 1.8 s sf0.1 q32 run). TRADE-OFF: localCheckpoint sacrifices
-    # lineage-based recompute — on clusters with preemptible executors
-    # set SHARE_SETS=False to keep the recompute-per-branch plan.
-    if SHARE_SETS:
-        out = out.localCheckpoint(eager=True)
-    return out
+    # lineage-based recompute of these blocks on executor loss.
+    return out.localCheckpoint(eager=True)
 
 
 def _banded(wide: DataFrame, num_hashes: int,
@@ -588,13 +579,10 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
         raise ValueError(
             f"max_hamming must be in [0, {_SIMHASH_BITS - 1}] for "
             f"{_SIMHASH_BITS}-bit simhash")
-    sig = simhash(df, id_col, text_col)
-    if SHARE_SETS:
-        # both sides of the band self-join consume the signature
-        # relation; share one computed copy (64 aggregate expressions
-        # over every token — see _doc_shingle_sets for the trade-off and
-        # why eager, not lazy)
-        sig = sig.localCheckpoint(eager=True)
+    # both sides of the band self-join consume the signature relation;
+    # share one computed copy (64 aggregate expressions over every token
+    # — see _doc_shingle_sets for the trade-off and why eager, not lazy)
+    sig = simhash(df, id_col, text_col).localCheckpoint(eager=True)
     n_bands = max_hamming + 1
     base_w, rem = divmod(_SIMHASH_BITS, n_bands)
     bands = []
@@ -885,9 +873,8 @@ def prefix_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     sets = _doc_shingle_sets(df, id_col, text_col, n)
     fp = F.md5(F.concat_ws(",", F.transform(
         F.array_sort("hs"), lambda x: x.cast("string"))))
-    mem = sets.select("id", "sz", "hs", fp.alias("_fp"))
-    if SHARE_SETS:
-        mem = mem.localCheckpoint(eager=True)
+    mem = (sets.select("id", "sz", "hs", fp.alias("_fp"))
+               .localCheckpoint(eager=True))
     grp = mem.groupBy("_fp").agg(F.min("id").alias("_rep"),
                                  F.count("*").alias("_f"))
     grp = grp.localCheckpoint(eager=True)  # shared: dup check + joins

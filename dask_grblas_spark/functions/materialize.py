@@ -54,24 +54,6 @@ def estimated_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def _gate_log(kind: str, est: int | None, thr: int, decision: bool):
-    """One stderr line per gate decision when $SPARK_GRAFT_GATE_LOG is
-    set (r13, verdict item 2): the sf1-class probe needs to SEE which
-    size gates fire where, with the estimate they fired on. No-op (one
-    env lookup) otherwise; never changes a decision."""
-    if not os.environ.get("SPARK_GRAFT_GATE_LOG"):
-        return
-    import sys
-    import traceback
-    site = "?"
-    for fr in reversed(traceback.extract_stack()[:-2]):
-        if "materialize.py" not in fr.filename:
-            site = f"{os.path.basename(fr.filename)}:{fr.lineno}"
-            break
-    print(f"GATE {kind} site={site} est={est} thr={thr} "
-          f"decision={decision}", file=sys.stderr, flush=True)
-
-
 def should_materialize(df: DataFrame,
                        threshold_bytes: int | None = None) -> bool:
     """The gate's decision alone: True when the plan's estimated output
@@ -82,9 +64,7 @@ def should_materialize(df: DataFrame,
     only pays for itself once it is materialized and shared."""
     thr = _size_threshold() if threshold_bytes is None else threshold_bytes
     est = estimated_bytes(df)
-    decision = est is None or est > thr
-    _gate_log("materialize", est, thr, decision)
-    return decision
+    return est is None or est > thr
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -156,8 +136,6 @@ def broadcast_if_small(df: DataFrame,
     thr = (_broadcast_threshold() if threshold_bytes is None
            else threshold_bytes)
     est = estimated_bytes(df if size_of is None else size_of)
-    keep = est is not None and est <= thr
-    _gate_log("broadcast", est, thr, keep)
-    if keep:
+    if est is not None and est <= thr:
         return F.broadcast(df)
     return df

@@ -51,9 +51,10 @@ def _cached_build(spark: SparkSession, sf_dir: str, name: str, build):
         # round of the iterative loops) pays 32 task launches per
         # read. Re-cache at a row-count-derived width (~64k rows per
         # partition, floor 1, cap defaultParallelism — the
-        # _prep_adjacency sizing rule); the narrow coalesce costs one
-        # cheap pass over the already-cached aggregate and is a no-op
-        # decision at sizes that already fill the cores.
+        # algorithms' _adjacency_partitions sizing rule); the narrow
+        # coalesce costs one cheap pass over the already-cached
+        # aggregate and is a no-op decision at sizes that already fill
+        # the cores.
         par = spark.sparkContext.defaultParallelism
         k = max(1,
                 min(par, -(-int(n) // _CACHE_ROWS_PER_PARTITION)),

@@ -17,6 +17,16 @@ def fastsv_matrix(spark):
     return gb.Matrix.from_values(rows, cols, [1] * len(rows), nrows=12, ncols=12)
 
 
+def empty_cache_manager(spark):
+    """Spark's SQL CacheManager; skips the test unless it starts empty,
+    since an emptiness check after the run would be meaningless."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    if not cm.isEmpty():
+        pytest.skip("another test left session-level caches; emptiness "
+                    "delta would be meaningless")
+    return cm
+
+
 def test_connected_components(spark):
     A = fastsv_matrix(spark)
     comp = alg.connected_components(A).to_dict()
@@ -97,16 +107,34 @@ def test_iterative_loops_release_their_caches(spark):
     Every persist made inside a loop must be released by the time it
     returns. Checked via CacheManager emptiness (localCheckpoint blocks
     are RDD-level, cleaned asynchronously, and NOT part of this leak)."""
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    if not cm.isEmpty():
-        pytest.skip("another test left session-level caches; emptiness "
-                    "delta would be meaningless")
+    cm = empty_cache_manager(spark)
     A = fastsv_matrix(spark)
     for _ in range(2):
         alg.connected_components(A).to_dict()
         alg.bfs_level(A, 0).to_dict()
         alg.sssp(A, 0).to_dict()
     assert cm.isEmpty(), "iterative algorithms leaked cache entries"
+
+
+@pytest.mark.parametrize("run", [
+    lambda A: alg.bfs_level(A, 0),
+    lambda A: alg.sssp(A, 0),
+    lambda A: alg.connected_components(A),
+], ids=["bfs_level", "sssp", "connected_components"])
+def test_iterative_loops_release_their_caches_on_error(spark, monkeypatch,
+                                                       run):
+    """A loop that raises partway through (here: at its first lineage
+    cut) must still release every cache it made — the input cache, the
+    partitioned adjacency and the per-round persists."""
+    cm = empty_cache_manager(spark)
+
+    def boom(self, *args, **kwargs):
+        raise RuntimeError("injected checkpoint failure")
+
+    monkeypatch.setattr(gb.Vector, "checkpoint", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        run(fastsv_matrix(spark))
+    assert cm.isEmpty(), "a failed loop leaked cache entries"
 
 
 def test_connected_components_sparse_hashed_ids(spark):
@@ -145,10 +173,7 @@ def test_ivf_topk_releases_session_caches(spark):
 
     from dask_grblas_spark.functions import similarity
 
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    if not cm.isEmpty():
-        pytest.skip("another test left session-level caches; emptiness "
-                    "delta would be meaningless")
+    cm = empty_cache_manager(spark)
     emb = spark.range(64).select(
         F.col("id").alias("vec_id"),
         F.array(*[(F.pmod(F.xxhash64("id", F.lit(k)), F.lit(1000))

@@ -33,8 +33,9 @@ if [ "${1:-full}" != "quick" ]; then
   echo "== 4. hash-stability probe (float-heaviest gates x 4 partitionings)"
   python tools/stability_probe.py
 
-  echo "== 5. unit tests"
+  echo "== 5. unit tests (engine + benchmark generator determinism)"
   python -m pytest tests/ -q
+  python -m pytest perfbench/tests -q
 fi
 
 echo "ALL VERIFICATION STAGES GREEN"
